@@ -312,6 +312,15 @@ def _load_entry():
     return entry
 
 
+# Queries that left a plan in Spark's CacheManager. The engine
+# materialises only with localCheckpoint, so any entry here is a leak:
+# a later run of an identical plan would be served from that cache and
+# its timing flattered. The run fails (exit 4) when this is non-empty.
+# (getPersistentRDDs() is no leak signal: local-checkpoint RDDs stay
+# listed there until JVM GC.)
+CACHE_LEAKS: list[str] = []
+
+
 def _run_once(fn, name: str, spark, collect_small: bool) -> float:
     t0 = time.perf_counter()
     df = fn(spark, SF_DIR)
@@ -319,7 +328,11 @@ def _run_once(fn, name: str, spark, collect_small: bool) -> float:
         df.collect()
     else:
         df.write.format("noop").mode("overwrite").save()
-    return time.perf_counter() - t0
+    dt = time.perf_counter() - t0
+    if not spark._jsparkSession.sharedState().cacheManager().isEmpty():
+        CACHE_LEAKS.append(name)
+        spark.catalog.clearCache()  # keep the remaining timings valid
+    return dt
 
 
 # Hypervisor-steal gating (r8, guide §1 "measure correctly"): this VM
@@ -533,6 +546,7 @@ def main() -> None:
         # bounds, not steady state — treat regressions there as noise
         # until reproduced in a clean window
         "steal_flagged": steal_flagged,
+        "cache_leaks": sorted(set(CACHE_LEAKS)),
     }
     with open(FULL_OUT, "w") as f:
         json.dump(full, f, indent=1, sort_keys=True)
@@ -594,6 +608,13 @@ def main() -> None:
             file=sys.stderr,
         )
         rc = 3
+    if CACHE_LEAKS:
+        print(
+            "CACHE LEAK: queries left plans in the CacheManager: "
+            + ", ".join(sorted(set(CACHE_LEAKS))),
+            file=sys.stderr,
+        )
+        rc = rc or 4
     sys.exit(rc)
 
 
@@ -608,7 +629,9 @@ def _vs_committed(timings: dict, prior_times: dict) -> dict:
     common = [
         (name, prior_times[name], now)
         for name, now in timings.items()
-        if prior_times.get(name)
+        # a zero committed time has no ratio: skipped on purpose, not
+        # because it reads as false
+        if name in prior_times and prior_times[name] > 0
     ]
     if not common:
         return {"n_common": 0}

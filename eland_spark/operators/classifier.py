@@ -11,7 +11,7 @@ Scale shape: the token->bucket feature table is materialized ONCE
 (one explode + one (doc, bucket) aggregation, localCheckpoint) and
 re-scanned per iteration; each iteration shuffles on the doc id and
 the bucket id only. At 100 TB this is the standard distributed
-full-batch LR: iters * (2 scans of the cached features + 2 bounded
+full-batch LR: iters * (2 scans of the checkpointed features + 2 bounded
 shuffles), weights live on the driver (model-sized, not data-sized).
 
 ``portable=True`` hashes buckets with md5 so a SQL oracle can replay

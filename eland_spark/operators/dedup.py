@@ -45,6 +45,29 @@ def drop_duplicates(df: "DataFrame", subset=None, keep: str = "first"):
     return EDF(ranked.filter(F.col("__rn__") == 1).drop("__rn__"), schema)
 
 
+def _union_find_min_labels(edges) -> dict:
+    """Driver union-find over ``(u, v)`` pairs: maps every node seen to
+    its component's minimum node (union by MIN, path compression)."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for u, v in edges:
+        parent.setdefault(u, u)
+        parent.setdefault(v, v)
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            lo, hi = (ru, rv) if ru < rv else (rv, ru)
+            parent[hi] = lo
+    return {x: find(x) for x in parent}
+
+
 def connected_components(
     pairs,
     src: str = "id_a",
@@ -98,31 +121,17 @@ def connected_components(
     # bound probe, the node set, and round 1's two edge references —
     # without it, `nodes` re-executed the whole pipeline at action time
     e0 = e0.localCheckpoint(eager=False)
+    # u and v may differ in type (int src, bigint dst): the union
+    # coerces both to one common type, which every output column uses
+    nodes = (
+        e0.select(F.col("u").alias("node"))
+        .unionByName(e0.select(F.col("v").alias("node")))
+        .distinct()
+    )
     if driver_fold_max_edges:
         head = e0.limit(int(driver_fold_max_edges) + 1).collect()
         if len(head) <= driver_fold_max_edges:
-            parent: dict = {}
-
-            def _find0(x):
-                root = x
-                while parent.get(root, root) != root:
-                    root = parent[root]
-                while parent.get(x, x) != x:
-                    parent[x], x = root, parent[x]
-                return root
-
-            seen = set()
-            for r in head:
-                u, v = r[0], r[1]
-                seen.add(u)
-                seen.add(v)
-                if u == v:
-                    continue
-                ru, rv = _find0(u), _find0(v)
-                if ru != rv:
-                    lo, hi = (ru, rv) if ru < rv else (rv, ru)
-                    parent[hi] = lo
-            labels = sorted((n, _find0(n)) for n in seen)
+            labels = sorted(_union_find_min_labels(head).items())
             # broadcast hint: the local frame has no stats (LogicalRDD
             # defaults to a huge size estimate), so a downstream
             # corpus join would pick sort-merge and shuffle the corpus;
@@ -131,17 +140,11 @@ def connected_components(
             return F.broadcast(
                 e0.sparkSession.createDataFrame(
                     labels,
-                    schema=e0.select(
-                        F.col("u").alias("node"),
-                        F.col("v").alias("component"),
+                    schema=nodes.select(
+                        "node", F.col("node").alias("component")
                     ).schema,
                 )
             )
-    nodes = (
-        e0.select(F.col("u").alias("node"))
-        .unionByName(e0.select(F.col("v").alias("node")))
-        .distinct()
-    )
     edges = e0.filter(F.col("u") != F.col("v")).distinct()
 
     def _fingerprint(e):
@@ -195,24 +198,7 @@ def connected_components(
             # materialized — no recompute), labels = component min.
             # Identical to the loop's fixed point; skips the remaining
             # rounds' job waves.
-            rows = edges.collect()
-            parent: dict = {}
-
-            def _find(x):
-                root = x
-                while parent.get(root, root) != root:
-                    root = parent[root]
-                while parent.get(x, x) != x:
-                    parent[x], x = root, parent[x]
-                return root
-
-            for r in rows:
-                ru, rv = _find(r["u"]), _find(r["v"])
-                if ru != rv:
-                    # union by MIN so every root is its component's min
-                    lo, hi = (ru, rv) if ru < rv else (rv, ru)
-                    parent[hi] = lo
-            labels = [(x, _find(x)) for x in parent]
+            labels = list(_union_find_min_labels(edges.collect()).items())
             if labels:
                 spark = edges.sparkSession
                 star = spark.createDataFrame(
@@ -874,7 +860,7 @@ def minhash_candidate_pairs(
     PAIR side instead of once per row (measured 100x slowdown).
     localCheckpoint over persist: checkpoint blocks are GC-cleaned when
     the frame goes out of scope, while a persisted DataFrame stays
-    pinned in the CacheManager until explicit unpersist — repeated dedup
+    pinned in the CacheManager until explicitly released — repeated dedup
     calls in one session would leak storage. At a real 100 TB scale this
     stage is a persisted/bucketed intermediate table with explicit
     lifecycle instead.
@@ -892,7 +878,7 @@ def minhash_candidate_pairs(
     )
     l, r = banded.alias("l"), banded.alias("r")
     # pair candidates carry only ids through the shuffle; signatures are
-    # attached afterwards from the (small, cached) sig table
+    # attached afterwards from the (small, checkpointed) sig table
     pairs = (
         l.join(r, on="__bucket__")
         .filter(F.col("l.__id__") < F.col("r.__id__"))

@@ -7,8 +7,9 @@ the column). This operator computes exact interpolated percentiles the
 scalable way: range-partition sort + per-partition offsets + a global
 rank filter. Everything heavy stays codegen'd and parallel; only the
 ``len(ps) * 2`` boundary rows and the 1-row-per-partition count table
-ever reach the driver. Global ranks come from the bit layout of
-``monotonically_increasing_id`` on the sorted frame (pid << 33 | pos)
+ever reach the driver. Global ranks come from the shared rank pass
+(``ranking._range_rank``: the bit layout of
+``monotonically_increasing_id`` on the sorted frame, pid << 33 | pos)
 — no window node at all.
 
 At 100 TB: one range shuffle of the (single) column, then pure maps —
@@ -18,9 +19,10 @@ no single-reducer merge, no driver-size state. Interpolation matches pandas/Duck
 
 from __future__ import annotations
 
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .ranking import _range_rank
 
 __all__ = ["exact_percentiles", "weighted_quantiles"]
 
@@ -35,60 +37,31 @@ def exact_percentiles(
     empty)."""
     c = F.col(col) if isinstance(col, str) else col
     vals = sdf.select(c.cast("double").alias("v")).filter(F.col("v").isNotNull())
-    n_parts = partitions or sdf.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    vals = vals.repartitionByRange(int(n_parts), F.col("v")).sortWithinPartitions("v")
-    # monotonically_increasing_id on the sorted, cached frame encodes
-    # (partition_id << 33) | row_in_partition — recovering the global
-    # rank with bit arithmetic needs NO window and NO extra exchange
-    # (a pid-window would re-shuffle on pid; this is a pure map)
-    vals = vals.withColumn("__mid__", F.monotonically_increasing_id()).cache()
-    try:
-        # per-partition counts -> driver-side cumulative offsets (tiny)
-        part_counts = (
-            vals.groupBy(F.shiftright(F.col("__mid__"), 33).alias("__pid__"))
-            .count()
-            .orderBy("__pid__")
-            .collect()
-        )
-        if not part_counts:
-            return [float("nan")] * len(ps)
-        n = sum(r["count"] for r in part_counts)
-        offsets: dict[int, int] = {}
-        acc = 0
-        for r in part_counts:
-            offsets[r["__pid__"]] = acc
-            acc += r["count"]
+    order = [F.col("v").asc()]
+    ranked, _, offsets = _range_rank(vals, order, "__rank__", partitions)
+    if not offsets:
+        return [float("nan")] * len(ps)
+    n = ranked._eland_rank_total
 
-        # global positions needed: floor/ceil of p*(n-1)
-        want: set[int] = set()
-        pos = []
-        for p in ps:
-            x = p * (n - 1)
-            lo, hi = int(x), min(int(x) + 1, n - 1)
-            pos.append((x, lo, hi))
-            want.update((lo, hi))
-
-        off_map = F.create_map(
-            *[F.lit(v) for kv in offsets.items() for v in kv]
-        )
-        ranked = vals.withColumn(
-            "__rank__",
-            off_map[F.shiftright(F.col("__mid__"), 33)]
-            + F.col("__mid__").bitwiseAND(F.lit((1 << 33) - 1)),
-        )
-        rows = (
-            ranked.filter(F.col("__rank__").isin(list(want)))
-            .select("__rank__", "v")
-            .collect()
-        )
-        by_rank = {r["__rank__"]: r["v"] for r in rows}
-        out = []
-        for x, lo, hi in pos:
-            vlo, vhi = by_rank[lo], by_rank[hi]
-            out.append(vlo + (x - lo) * (vhi - vlo))
-        return out
-    finally:
-        vals.unpersist()
+    # global positions needed (0-based): floor/ceil of p*(n-1)
+    want: set[int] = set()
+    pos = []
+    for p in ps:
+        x = p * (n - 1)
+        lo, hi = int(x), min(int(x) + 1, n - 1)
+        pos.append((x, lo, hi))
+        want.update((lo, hi))
+    rows = (
+        ranked.filter(F.col("__rank__").isin([w + 1 for w in want]))
+        .select("__rank__", "v")
+        .collect()
+    )
+    by_pos = {r["__rank__"] - 1: r["v"] for r in rows}
+    out = []
+    for x, lo, hi in pos:
+        vlo, vhi = by_pos[lo], by_pos[hi]
+        out.append(vlo + (x - lo) * (vhi - vlo))
+    return out
 
 
 def weighted_quantiles(

@@ -2,21 +2,24 @@
 
 ``row_number() OVER (ORDER BY ...)`` with an empty PARTITION BY pulls
 every row through ONE partition — the classic scale cliff. This
-operator produces the same 1-based global row numbers the scalable way:
+operator produces the same 1-based global row numbers the scalable way
+(:func:`_range_rank`, the one rank pass every caller shares):
 
 1. range-partition + sort by the order columns (one range shuffle —
    the same shuffle a global sort needs anyway);
 2. per-partition counts -> cumulative offsets on the driver (one tiny
    row per partition);
-3. ``monotonically_increasing_id`` on the SORTED, CACHED frame encodes
+3. ``monotonically_increasing_id`` on the sorted frame encodes
    (partition_id << 33) | row_in_partition — pure bit arithmetic
    recovers the within-partition position, and ``offset[pid] + pos + 1``
    is the global rank. No window, no extra exchange, everything stays
    JVM-side.
 
-The two passes share the cached sorted frame (range boundaries come
-from sampling, so the frame must be pinned for the id assignment to be
-consistent with the counted layout).
+The two passes share the sorted frame, materialised once with
+``localCheckpoint`` (range boundaries come from sampling, so the id
+assignment must be computed once to stay consistent with the counted
+layout; checkpoint blocks are cleaned once unreferenced, so no caller
+has anything to release).
 """
 
 from __future__ import annotations
@@ -43,84 +46,113 @@ __all__ = [
 _POS_MASK = (1 << 33) - 1
 
 
+def _range_rank(
+    sdf: DataFrame,
+    ordering: list[Column],
+    rank_col: str,
+    partitions: int | None = None,
+    range_ordering: list[Column] | None = None,
+    bucket_col: str | None = None,
+    agg_cols: list[Column] | None = None,
+    extra_keys: list[Column] | None = None,
+    pos_windows: dict[str, Column] | None = None,
+):
+    """The range-rank pass: ``sdf`` range-partitioned on
+    ``range_ordering`` (default ``ordering``), sorted within partitions
+    on ``ordering`` and materialised; ONE grouped collect keyed by
+    partition id (plus ``extra_keys``) returns each group's
+    ``__cnt__`` and ``agg_cols``; the driver folds the counts into
+    per-partition rank offsets.
+
+    ``range_ordering`` may narrow the range partitioning to a prefix of
+    the order columns: rows equal on the prefix are then CO-LOCATED,
+    and global order is preserved because equal prefix keys never
+    straddle a range boundary. ``pos_windows`` maps output names to
+    window aggregates over ``F.col("__pos__")`` (0-based position in
+    the partition) partitioned by such a prefix. They are evaluated
+    BEFORE materialisation, where the planner still sees the range
+    partitioning — so e.g. a tie-resolution window on the value reuses
+    the range exchange instead of adding a hash shuffle — and each is
+    re-based to a global rank like ``rank_col`` (valid because the
+    window's rows share one partition). Trade-off: a single
+    massively-duplicated prefix value concentrates in one partition —
+    same skew exposure the tie window itself would have.
+
+    Returns ``(ranked, stats, offsets)``: ``ranked`` is ``sdf`` plus
+    ``rank_col`` (1-based global rank, long), every ``pos_windows``
+    column and, when ``bucket_col`` is given, the partition id under
+    that name; it stashes the row count as ``_eland_rank_total`` (see
+    :func:`_ranked_total`). ``stats`` is the collected Rows ordered by
+    ``__b__`` (partition id); ``offsets`` maps partition id -> its
+    exclusive rank offset."""
+    spark = sdf.sparkSession
+    n_parts = partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    src = (
+        sdf.repartitionByRange(int(n_parts), *(range_ordering or ordering))
+        .sortWithinPartitions(*ordering)
+        .withColumn("__mid__", F.monotonically_increasing_id())
+    )
+    pos = F.col("__mid__").bitwiseAND(F.lit(_POS_MASK))
+    if pos_windows:
+        src = src.withColumn("__pos__", pos).withColumns(pos_windows).drop("__pos__")
+    # materialise once: the counts collect and every consumer must see
+    # the same id assignment (range boundaries come from sampling)
+    src = src.localCheckpoint(eager=False)
+    pid = F.shiftright(F.col("__mid__"), 33)
+    stats = (
+        src.groupBy(pid.alias("__b__"), *(extra_keys or []))
+        .agg(F.count(F.lit(1)).alias("__cnt__"), *(agg_cols or []))
+        .orderBy("__b__")
+        .collect()
+    )
+    part_counts: dict[int, int] = {}
+    for r in stats:
+        part_counts[r["__b__"]] = part_counts.get(r["__b__"], 0) + r["__cnt__"]
+    offsets: dict[int, int] = {}
+    acc = 0
+    for b in sorted(part_counts):
+        offsets[b] = acc
+        acc += part_counts[b]
+    base = (
+        F.create_map(*[F.lit(v) for kv in offsets.items() for v in kv])[pid]
+        if offsets
+        else F.lit(0)  # empty frame: no offsets to look up (no rows)
+    )
+    new_cols = {bucket_col: pid} if bucket_col else {}
+    new_cols[rank_col] = (base + pos + 1).cast("long")
+    for name in pos_windows or {}:
+        new_cols[name] = base + F.col(name) + 1
+    out = src.withColumns(new_cols).drop("__mid__")
+    # the offsets fold already summed the exact row count — stash it so
+    # internal callers (_global_cumaggs/_bucketed_frame/...) can skip
+    # their own count() job wave (private contract; see _ranked_total)
+    out._eland_rank_total = acc
+    return out, stats, offsets
+
+
 def with_global_rank(
     sdf: DataFrame,
     order_by: list[str | Column],
     ascending: bool = True,
     rank_col: str = "rank",
     partitions: int | None = None,
-    range_cols: list[str | Column] | None = None,
 ) -> DataFrame:
     """Return ``sdf`` with a 1-based global row-number column over the
     total order given by ``order_by`` (add a unique key as the last
     order column for fully deterministic ranks). The result is
     range-partitioned and sorted — downstream ``filter(rank <= k)``
-    prunes whole partitions via the offsets already paid for.
-
-    ``range_cols`` (default: all of ``order_by``) narrows the RANGE
-    partitioning to a prefix of the order columns while the full
-    ordering still sorts within partitions. Rows equal on the prefix
-    are then CO-LOCATED (RangePartitioning satisfies the clustered
-    distribution a downstream ``Window.partitionBy(prefix)`` needs), so
-    e.g. a tie-resolution window on the value reuses this exchange
-    instead of adding a hash shuffle; global order is preserved because
-    equal prefix keys never straddle a range boundary. Trade-off: a
-    single massively-duplicated prefix value concentrates in one
-    partition — same skew exposure the tie window itself would have.
-
-    NOTE: the returned frame holds a cache pin; call
-    ``.unpersist()`` on it (or let it age out) when done.
-    """
-    spark = sdf.sparkSession
-    n_parts = partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    prunes whole partitions via the offsets already paid for."""
     cols = [F.col(c) if isinstance(c, str) else c for c in order_by]
     ordering = [c.asc() if ascending else c.desc() for c in cols]
-    if range_cols is None:
-        range_ordering = ordering
-    else:
-        rc = [F.col(c) if isinstance(c, str) else c for c in range_cols]
-        range_ordering = [c.asc() if ascending else c.desc() for c in rc]
-    ranked_src = (
-        sdf.repartitionByRange(int(n_parts), *range_ordering)
-        .sortWithinPartitions(*ordering)
-        .withColumn("__mid__", F.monotonically_increasing_id())
-        .cache()
-    )
-    counts = (
-        ranked_src.groupBy(F.shiftright(F.col("__mid__"), 33).alias("__pid__"))
-        .count()
-        .orderBy("__pid__")
-        .collect()
-    )
-    offsets: dict[int, int] = {}
-    acc = 0
-    for r in counts:
-        offsets[r["__pid__"]] = acc
-        acc += r["count"]
-    if offsets:
-        off_map = F.create_map(
-            *[F.lit(v) for kv in offsets.items() for v in kv]
-        )
-        rank = (
-            off_map[F.shiftright(F.col("__mid__"), 33)]
-            + F.col("__mid__").bitwiseAND(F.lit(_POS_MASK))
-            + 1
-        )
-    else:  # empty frame: no offsets to look up (no rows to rank)
-        rank = F.col("__mid__").bitwiseAND(F.lit(_POS_MASK)) + 1
-    out = ranked_src.withColumn(rank_col, rank.cast("long")).drop("__mid__")
-    # the offsets fold already summed the exact row count — stash it so
-    # internal callers (_global_cumaggs/_bucketed_frame/...) can skip
-    # their own count() job wave (private contract; see _ranked_total)
-    out._eland_rank_total = acc
+    out, _, _ = _range_rank(sdf, ordering, rank_col, partitions)
     return out
 
 
 def _ranked_total(ranked: DataFrame) -> int:
     """Row count of a :func:`with_global_rank` result without a job:
     the rank pass already folded per-partition counts on the driver.
-    Falls back to ``count()`` (metadata-cheap — the frame is cached)
-    for frames that lost the stash (e.g. after re-wrapping)."""
+    Falls back to ``count()`` for frames that lost the stash (e.g.
+    after re-wrapping)."""
     n = getattr(ranked, "_eland_rank_total", None)
     return int(n) if n is not None else ranked.count()
 
@@ -154,47 +186,12 @@ def _ranked_bucket_stats(
     fold over the ``__cnt__`` sums per bucket either way. Bucket
     sizes come from range-partition sampling rather than exact rank
     arithmetic — same balance the rank pass itself runs on. The
-    returned frame holds a cache pin (the :func:`with_global_rank`
-    contract) and stashes ``_eland_rank_total``."""
-    spark = sdf.sparkSession
-    n_parts = partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    cols = [F.col(c) if isinstance(c, str) else c for c in order_by]
-    ordering = [c.asc() for c in cols]
-    src = (
-        sdf.repartitionByRange(int(n_parts), *ordering)
-        .sortWithinPartitions(*ordering)
-        .withColumn("__mid__", F.monotonically_increasing_id())
-        .cache()
+    returned frame stashes ``_eland_rank_total``."""
+    ordering = [(F.col(c) if isinstance(c, str) else c).asc() for c in order_by]
+    out, stats, offsets = _range_rank(
+        sdf, ordering, "__g__", partitions,
+        bucket_col="__b__", agg_cols=agg_cols, extra_keys=extra_keys,
     )
-    pid = F.shiftright(F.col("__mid__"), 33)
-    keys = [pid.alias("__b__"), *(extra_keys or [])]
-    stats = (
-        src.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("__cnt__"), *agg_cols)
-        .orderBy("__b__")
-        .collect()
-    )
-    bucket_counts: dict[int, int] = {}
-    for r in stats:
-        bucket_counts[r["__b__"]] = (
-            bucket_counts.get(r["__b__"], 0) + r["__cnt__"]
-        )
-    offsets: dict[int, int] = {}
-    acc = 0
-    for b in sorted(bucket_counts):
-        offsets[b] = acc
-        acc += bucket_counts[b]
-    if offsets:
-        off_map = F.create_map(
-            *[F.lit(v) for kv in offsets.items() for v in kv]
-        )
-        rank = off_map[pid] + F.col("__mid__").bitwiseAND(F.lit(_POS_MASK)) + 1
-    else:  # empty frame
-        rank = F.col("__mid__").bitwiseAND(F.lit(_POS_MASK)) + 1
-    out = src.select(
-        "*", pid.alias("__b__"), rank.cast("long").alias("__g__")
-    ).drop("__mid__")
-    out._eland_rank_total = acc
     return out, F.col("__b__"), stats, offsets
 
 
@@ -1442,7 +1439,7 @@ def keyed_midranks(
     — never a per-key shuffle, and no second job wave; a lazy
     broadcast-join formulation was measured 1.6-2.6x SLOWER end-to-end
     because the broadcast side rebuilt the count frame from source
-    instead of reading the cached rank pass). Keys must sort the same
+    instead of reading the materialised rank pass). Keys must sort the same
     in Python and Spark, so null keys raise and key values are
     restricted to int/str (checked at runtime, not just documented —
     a Python/Spark ordering divergence would silently corrupt every

@@ -1052,7 +1052,7 @@ class Series:
         from pyspark.sql import Window
 
         from .frame import DataFrame as EDF
-        from .operators.ranking import with_global_rank
+        from .operators.ranking import _range_rank, with_global_rank
 
         if method not in ("average", "min", "max", "first", "dense"):
             raise ValueError("method must be average/min/max/first/dense")
@@ -1064,17 +1064,25 @@ class Series:
         key_cols = [F.col(schema.resolve(c)).alias(c) for c in icols]
         base = frame._sdf.select(*key_cols, self._expr.alias("__val__"))
         nonnull = base.filter(F.col("__val__").isNotNull())
-        # tie methods window over __val__ afterwards: range-partition on
-        # the value ALONE so equal values are co-located and that window
-        # reuses this exchange (no second shuffle); full ordering still
-        # sorts within partitions, so ranks are unchanged
-        tie_method = method in ("average", "min", "max")
-        ranked = with_global_rank(
+        # tie methods window over __val__: range-partition on the value
+        # ALONE so equal values are co-located and that window reuses
+        # the rank pass's exchange (no second shuffle); full ordering
+        # still sorts within partitions, so ranks are unchanged
+        tie_agg = {"min": F.min, "max": F.max, "average": F.avg}.get(method)
+        ordering = [
+            F.col(c).asc() if ascending else F.col(c).desc()
+            for c in ["__val__", *icols]
+        ]
+        ranked, _, _ = _range_rank(
             nonnull,
-            ["__val__", *icols],
-            ascending=ascending,
-            rank_col="__rn__",
-            range_cols=["__val__"] if tie_method else None,
+            ordering,
+            "__rn__",
+            range_ordering=ordering[:1] if tie_agg else None,
+            pos_windows={
+                "__tie__": tie_agg(F.col("__pos__")).over(
+                    Window.partitionBy(F.col("__val__"))
+                )
+            } if tie_agg else None,
         )
         if method == "first":
             expr = F.col("__rn__").cast("double")
@@ -1090,12 +1098,7 @@ class Series:
             ranked = ranked.join(dranked, on="__val__")
             expr = F.col("__dr__").cast("double")
         else:
-            agg = {"min": F.min, "max": F.max, "average": F.avg}[method]
-            expr = (
-                agg(F.col("__rn__"))
-                .over(Window.partitionBy(F.col("__val__")))
-                .cast("double")
-            )
+            expr = F.col("__tie__").cast("double")
         if pct:
             # pandas pct denominator: non-null count (dense: distinct
             # non-null count) — a 1-row aggregate broadcast in, never a

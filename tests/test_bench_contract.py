@@ -101,6 +101,16 @@ def test_vs_committed_digest():
     assert bench._vs_committed({"q": 1.0}, {}) == {"n_common": 0}
 
 
+def test_vs_committed_skips_zero_time_entries():
+    """A committed time of exactly 0.0 has no ratio: it is skipped on
+    purpose (explicit ``> 0`` test, not truthiness) and never divides."""
+    d = bench._vs_committed({"q0": 0.3, "q1": 1.0}, {"q0": 0.0, "q1": 1.0})
+    assert d["n_common"] == 1
+    assert d["n_regressed"] == 0
+    assert d["geomean_speedup"] == 1.0
+    assert bench._vs_committed({"q0": 0.3}, {"q0": 0.0}) == {"n_common": 0}
+
+
 def test_compare_recovers_from_truncated_driver_tail():
     """BENCH_r05.json shipped with parsed: null — _prev_queries must
     still recover per-query timings from the recorded tail."""

@@ -12,6 +12,13 @@ from eland_spark.operators.percentiles import exact_percentiles
 SF = "/root/testdata/sf0.001"
 
 
+def _cache_manager_empty(spark):
+    """The rank pass materialises with localCheckpoint only, so it
+    must leave nothing in Spark's CacheManager (a pinned plan would
+    serve later identical plans from cache)."""
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_matches_hash_agg_percentile(spark):
     li = es.read_parquet(spark, f"{SF}/lineitem.parquet").to_spark()
     ps = [0.0, 0.25, 0.5, 0.75, 0.9, 1.0]
@@ -41,6 +48,7 @@ def test_global_rank_matches_window(spark):
 
     from eland_spark.operators.ranking import with_global_rank
 
+    spark.catalog.clearCache()
     sdf = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
     ranked = with_global_rank(
         sdf, ["o_totalprice", "o_orderkey"], ascending=False, rank_col="rnk",
@@ -60,7 +68,7 @@ def test_global_rank_matches_window(spark):
     assert got == exp
     plan = ranked._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan
-    ranked.unpersist()
+    assert _cache_manager_empty(spark)
 
 
 def test_global_rank_ascending_and_small_partitions(spark):
@@ -68,6 +76,7 @@ def test_global_rank_ascending_and_small_partitions(spark):
 
     from eland_spark.operators.ranking import with_global_rank
 
+    spark.catalog.clearCache()
     sdf = spark.createDataFrame(
         [(i, float(i % 5)) for i in range(100)], "id long, v double"
     )
@@ -75,7 +84,75 @@ def test_global_rank_ascending_and_small_partitions(spark):
     rows = ranked.select("id", "v", "r").collect()
     ordered = sorted(rows, key=lambda x: (x["v"], x["id"]))
     assert [x["r"] for x in ordered] == list(range(1, 101))
-    ranked.unpersist()
+    assert _cache_manager_empty(spark)
+
+
+def test_exact_percentiles_leaves_no_cache_pin(spark):
+    """exact_percentiles through the shared rank pass: same values as
+    Spark's hash-map percentile, and nothing left in the CacheManager
+    (it used to pin and release its own sorted frame)."""
+    spark.catalog.clearCache()
+    li = spark.read.parquet(f"{SF}/lineitem.parquet")
+    ps = [0.0, 0.1, 0.5, 0.99, 1.0]
+    mine = exact_percentiles(li, "l_quantity", ps, partitions=5)
+    ref = li.agg(
+        F.percentile("l_quantity", F.array(*[F.lit(p) for p in ps]))
+    ).collect()[0][0]
+    assert mine == pytest.approx(ref, abs=1e-9)
+    assert _cache_manager_empty(spark)
+
+
+def test_spearman_rank_pass_leaves_no_cache_pin(spark):
+    """spearman_corr ranks through _ranked_bucket_stats (keyed
+    midranks): same rho as midrank-then-Pearson in pandas, with heavy
+    ties, and an empty CacheManager afterwards."""
+    import numpy as np
+    import pandas as pd
+
+    from eland_spark.operators.ranking import spearman_corr
+
+    spark.catalog.clearCache()
+    rng = np.random.RandomState(5)
+    x = rng.randint(0, 30, 400).astype(float)
+    y = (x * 3 + rng.normal(0, 9, 400)).round(0)
+    pdf = pd.DataFrame({"x": x, "y": y})
+    sdf = spark.createDataFrame(pdf, schema="x double, y double")
+    row = spearman_corr(sdf, "x", "y", partitions=4).collect()[0]
+    want = pdf["x"].rank(method="average").corr(pdf["y"].rank(method="average"))
+    assert row["rho"] == pytest.approx(want, abs=1e-9)
+    assert row["n"] == 400
+    assert _cache_manager_empty(spark)
+
+
+@pytest.mark.parametrize("ascending", [True, False])
+def test_series_rank_matches_pandas_without_cache_pin(spark, ascending):
+    """Series.rank for every method on an integer column with ties
+    equals its reference, and no method leaves a plan in the
+    CacheManager. The reference is pandas, except for descending
+    ``first``: the engine breaks ties by the index in the rank
+    direction (row_number over value desc, index desc), while pandas
+    breaks them by order of appearance."""
+    import pandas as pd
+
+    spark.catalog.clearCache()
+    orders = es.read_parquet(spark, f"{SF}/orders.parquet", index_col="o_orderkey")
+    pdf = pd.read_parquet(f"{SF}/orders.parquet").set_index("o_orderkey")
+    for method in ("average", "min", "max", "first", "dense"):
+        got = (
+            orders["o_custkey"].rank(method=method, ascending=ascending)
+            .to_pandas()["rank"].sort_index()
+        )
+        if method == "first" and not ascending:
+            order = pdf.reset_index().sort_values(
+                ["o_custkey", "o_orderkey"], ascending=False
+            )["o_orderkey"]
+            want = pd.Series(range(1, len(order) + 1), index=order, dtype=float)
+        else:
+            want = pdf["o_custkey"].rank(method=method, ascending=ascending)
+        pd.testing.assert_series_equal(
+            got, want.sort_index(), check_names=False, check_index_type=False
+        )
+        assert _cache_manager_empty(spark), method
 
 
 def test_weighted_quantiles_matches_reference(spark):

@@ -166,6 +166,30 @@ def test_connected_components_driver_fold_matches_distributed(spark):
         assert m == d
 
 
+def test_connected_components_fold_mixed_key_types(spark):
+    """An int ``src`` and a bigint ``dst`` column: the round-0 driver
+    fold types ``node`` and ``component`` with the one common type the
+    distributed path's node union coerces to, so a bigint-only id
+    (past the int range) fits both columns and the fold result equals
+    the driver_fold_max_edges=0 result, values and schema."""
+    from eland_spark.operators.dedup import connected_components
+
+    big = 3_000_000_000
+    pairs = spark.createDataFrame(
+        [(1, big), (2, big), (5, 6), (7, 7), (9, 5)],
+        "id_a int, id_b bigint",
+    )
+    fold = connected_components(pairs)
+    dist = connected_components(pairs, driver_fold_max_edges=0)
+    assert [f.dataType for f in fold.schema] == [
+        f.dataType for f in dist.schema
+    ]
+    f = dict(map(tuple, fold.collect()))
+    d = dict(map(tuple, dist.collect()))
+    assert f == d
+    assert f == {1: 1, 2: 1, big: 1, 5: 5, 6: 5, 9: 5, 7: 7}
+
+
 def test_near_dup_components_end_to_end(spark, sf_dir):
     import eland_spark as es
     from eland_spark.operators.dedup import near_dup_components
