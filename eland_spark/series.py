@@ -951,13 +951,22 @@ class Series:
             # value inside that ulp flips buckets vs pandas (r5 fuzzer
             # find: a denormal vs the near-zero edge of a ±1e9 range).
             step = span / bins
-            edges = [mn + step * i for i in range(bins)] + [mx]
+            if step:
+                edges = [mn + step * i for i in range(bins)] + [mx]
+            else:
+                # linspace's underflow path: a step that rounds to zero
+                # (denormal span) scales i/bins by the span instead
+                edges = [mn + (i / bins) * span for i in range(bins)] + [mx]
             # pandas widens the outermost edge by 0.1% so extremes land
             # inside the first/last bucket
             if right:
                 edges[0] -= span * 0.001
             else:
                 edges[-1] += span * 0.001
+            if len(set(edges)) < len(edges):
+                # a span too narrow for the float grid collapses edges;
+                # pandas raises rather than emit empty buckets
+                raise ValueError(f"Bin edges must be unique: {edges}")
         else:
             edges = [float(e) for e in bins]
             if len(edges) < 2 or any(
